@@ -2,8 +2,8 @@
 and profiling engine with the capabilities of mariocosenza/kgsum.
 
 Reference semantics (file:line cites into /root/reference/) are re-expressed
-Spark-first: declarative DataFrame plans for every relational operator,
-vectorized pandas/Arrow UDFs for the NLP/extraction surface, explicit
+Spark-first: declarative DataFrame plans for every relational operator and
+for rule extraction, vectorized pandas/Arrow UDFs for the NLP surface, explicit
 shuffle partitioning, checkpoint/resume, and per-partition lineage.
 
 Layout:
@@ -11,7 +11,7 @@ Layout:
   schemas       explicit StructTypes for every table (no inference)
   synth         deterministic transcript corpus + golden-triple oracle
   assembly      window-ordered turn assembly (row_number over conv_id)
-  extraction    batched OpenIE-style triple + mention extraction (mapInPandas)
+  extraction    OpenIE-style triple + mention extraction (one Catalyst plan)
   linking       token-blocking, similarity candidate joins, hot-key salting
   canonicalize  iterative connected-components (large-star/small-star)
   pipeline      end-to-end staged run with checkpoint markers + lineage

@@ -3,7 +3,7 @@
 north_star: "window-ordered turn assembly per conv_id (row_number over
 (conv_id, turn_idx) preserving stable turn ordering and per-turn text
 equality)". The window's hash-partitioning by conv_id doubles as the
-explicit pre-extraction repartition: downstream mapInPandas batches see
+explicit pre-extraction repartition: downstream extraction tasks see
 whole conversations without a second shuffle.
 
 Reference analog: kgsum has no windows; its nearest is keep-last dedup

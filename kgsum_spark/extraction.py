@@ -1,28 +1,30 @@
-"""Batched OpenIE-style triple + mention extraction.
+r"""Triple + mention extraction as one Catalyst plan.
 
-The per-row Python of the reference (iterrows/apply extraction, e.g.
-/root/reference/src/preprocessing.py:308,369,441) becomes one
-`mapInPandas` pass: Arrow-batched pandas in, vectorized extraction,
-Arrow-batched triples out. The rule regexes are compiled once at module
-import, mirroring the reference's lazy model cache
-(/root/reference/src/preprocessing.py:50-77).
+`extract_raw_triples` is a single scan of the turns: split each turn into
+sentences, explode, pick the first rule (in rule-table order) whose anchored
+regex matches the sentence, and capture its two slots. Every step is a
+built-in expression, so the plan is whole-stage-codegen'd end to end and
+no row crosses into a Python worker. The rule table and the per-sentence
+semantics live in `rules.py`, which stays the Python-`re` oracle.
 
-r6 hot-path rewrite (guide §4.2 — hand whole batches to vectorized
-native code): sentence split, anchor prefilter and per-rule capture
-extraction all run through Arrow compute (RE2) instead of pandas
-.str/explode (per-row Python re). Measured on the 2M-turn bench corpus:
-2.2 s → 0.95 s per 400k turns per core, byte-identical triples.
+Java regex and Python `re` read the same pattern text differently in two
+places that matter here, so every pattern is translated once, at import,
+before Spark sees it:
 
-Engine parity: RE2 and Python `re` agree on these patterns ONLY for
-text whose characters all come from printable ASCII + [\\t\\n\\f\\r]
-(Python's \\s/\\S and `$` are Unicode-aware and treat \\x0b,
-\\x1c-\\x1f, \\x85, and Unicode spaces differently; RE2 has no
-lookbehind, so the sentence split is emulated with a \\x00 sentinel,
-which must therefore not occur in the text). Rows containing ANY other
-character are routed to the original pandas/Python-`re` path
-(`_extract_python`), so the semantics of the operator are exactly the
-r5 semantics on every input — the Arrow path is a fast path, not a new
-definition (tests assert parity on hostile inputs).
+- `.`: Java's default `.` also excludes `\r`, `\x85`, U+2028 and U+2029;
+  Python's excludes only `\n`. The `(?d)` (UNIX_LINES) prefix makes `\n`
+  Java's only line terminator, so `.` excludes exactly `\n` in both.
+- `\s`/`\S`: Java's `\s` is the ASCII class `[ \t\n\x0b\f\r]`;
+  Python's str `\s` is Unicode-aware (29 code points, e.g. `\x1c`,
+  `\x85`, NBSP, U+3000). Each `\s` becomes an explicit class listing
+  exactly the code points Python's `\s` matches, computed from `re` itself
+  over every code point, and each `\S` its negation.
+
+`_java_regex` refuses, at import, the patterns it cannot translate
+exactly: `\s`, `\S`, an escaped backslash or a nested `[` inside a
+`[...]` class. Rule patterns are anchored `^(?:...)\z`; `\z` is the
+absolute end of input, so Java's `find()` with that anchor is Python's
+`fullmatch`.
 
 Scale notes: extraction is embarrassingly parallel per turn; the only
 shuffle upstream is the turn-assembly window's hash partition on conv_id
@@ -34,223 +36,92 @@ as per-partition lineage (north_rule).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
+import sys
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .rules import RULES, SENTENCE_SPLIT
 
-RAW_TRIPLES_SCHEMA = (
-    "subj string, pred string, obj string, obj_is_iri boolean, "
-    "obj_is_mention boolean, conv_id string, turn_idx int, part_id int"
-)
 
-_OUT_COLS = ["subj", "pred", "obj", "obj_is_iri", "obj_is_mention",
-             "conv_id", "turn_idx", "part_id"]
-
-# Rows containing any char OUTSIDE printable ASCII + {\t, \n, \f, \r}
-# take the Python-`re` fallback: on the complement set, RE2's ASCII
-# \s/\S coincide with Python's Unicode-aware classes, `.` agrees, and
-# the \x00 split sentinel cannot collide with payload bytes.
-_NON_PORTABLE_RE = r"[^\x20-\x7e\t\n\x0c\r]"
-
-# The JVM fast path (pure Catalyst expressions, Java regex) needs a
-# STRICTER portable set than the Arrow path: Java's `.` treats \r as a
-# line terminator (won't match it) while Python's `.` matches it, so a
-# row containing \r must take the Python path. On printable ASCII +
-# {\t, \n, \f}: Java and Python agree on `.` (both exclude only \n from
-# this set), on ASCII \s/\S (identical 6-char class, \x0b excluded from
-# the set), on the fixed-width lookbehind sentence split, and Java
-# `rlike`'s find() with ^(?:...)$ anchors equals Python fullmatch
-# because no sentence can end in trailing whitespace (the split consumed
-# it), which is the only case where Java's $ is more lenient.
-_JVM_NON_PORTABLE_RE = r"[^\x20-\x7e\t\n\x0c]"
-
-# One regex alternation of every rule's literal anchor — a single RE2
-# scan marks the sentences that can match ANY rule (45% of bench-corpus
-# sentences carry no anchor and skip the per-rule loop entirely).
-_ANCHOR_ALT = "|".join(re.escape(r.anchor) for r in RULES)
+def _java_class(code_points: list[int], negate: bool = False) -> str:
+    """A Java character class listing `code_points`, runs as ranges."""
+    runs: list[list[int]] = []
+    for c in code_points:
+        if runs and c == runs[-1][1] + 1:
+            runs[-1][1] = c
+        else:
+            runs.append([c, c])
+    body = "".join(
+        f"\\x{{{a:x}}}" if a == b else f"\\x{{{a:x}}}-\\x{{{b:x}}}"
+        for a, b in runs)
+    return f"[{'^' if negate else ''}{body}]"
 
 
-def _named_fullmatch(pattern: str) -> str:
-    """Rewrite a rule pattern's two unnamed capture groups to (?P<s>…)
-    and (?P<o>…) and anchor it — pyarrow's extract_regex only exposes
-    named groups. Import-time assertion keeps the rule table honest."""
-    out: list[str] = []
-    gi = 0
-    j = 0
-    while j < len(pattern):
-        ch = pattern[j]
-        if ch == "(" and (j == 0 or pattern[j - 1] != "\\") \
-                and pattern[j:j + 2] != "(?":
-            out.append(f"(?P<{'s' if gi == 0 else 'o'}>")
-            gi += 1
-            j += 1
+# Every code point Python's str `\s` matches (29 of them).
+_PY_SPACE = [ord(c) for c in
+             re.findall(r"\s", "".join(map(chr, range(sys.maxunicode + 1))))]
+_SPACE = _java_class(_PY_SPACE)
+_NON_SPACE = _java_class(_PY_SPACE, negate=True)
+
+
+def _java_regex(pattern: str) -> str:
+    """Translate a Python `re` pattern into a Java regex that matches the
+    same strings (see the module docstring). Raises ValueError on a
+    construct inside a `[...]` class that the translation cannot keep
+    exact."""
+    out = ["(?d)"]
+    in_class = False
+    i = 0
+    while i < len(pattern):
+        ch = pattern[i]
+        if ch == "\\":
+            esc = pattern[i:i + 2]
+            if in_class and esc in ("\\s", "\\S", "\\\\"):
+                raise ValueError(
+                    f"cannot translate {esc!r} inside a class: {pattern!r}")
+            out.append(_SPACE if esc == "\\s"
+                       else _NON_SPACE if esc == "\\S" else esc)
+            i += 2
             continue
+        if ch == "[":
+            if in_class:
+                raise ValueError(
+                    f"'[' inside a class is a nested class in Java: {pattern!r}")
+            in_class = True
+        elif ch == "]" and in_class:
+            in_class = False
         out.append(ch)
-        j += 1
-    if gi != 2:
-        raise AssertionError(f"rule pattern must have exactly 2 groups: {pattern!r}")
-    return "^(?:" + "".join(out) + ")$"
+        i += 1
+    return "".join(out)
 
 
-_RE2_RULES = [(r, _named_fullmatch(r.pattern)) for r in RULES]
+_SENTENCE_SPLIT_JAVA = _java_regex(SENTENCE_SPLIT)
+# `\z` (absolute end of input) has no Python spelling, so it is appended
+# after the translation.
+_RULES_JAVA = [_java_regex(f"^(?:{r.pattern})") + "\\z" for r in RULES]
 
 
-def _extract_python(pdf: pd.DataFrame):
-    """The r5 pandas/Python-`re` path — retained verbatim as the exact
-    reference semantics for rows the Arrow fast path cannot take
-    (non-portable characters). First-match-wins in rule-table order to
-    agree exactly with the single-process oracle rules.extract_sentence."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def extract_raw_triples(turns: DataFrame) -> DataFrame:
+    """turns(conv_id, turn_idx, text, ...) → raw triples with surface-form
+    subjects/objects, one row per sentence that fullmatches a rule.
 
-    rules = [(r, f"^(?:{r.pattern})$") for r in RULES]
-    sent = pdf[["conv_id", "turn_idx", "part_id"]].copy()
-    sent["s"] = pdf["text"].fillna("").str.split(SENTENCE_SPLIT, regex=True)
-    sent = sent.explode("s", ignore_index=True)
-    sent = sent[sent["s"].notna() & (sent["s"] != "")]
-    sent = sent.reset_index(drop=True)
-    arr = pa.array(sent["s"], type=pa.string())
-    claimed = np.zeros(len(sent), dtype=bool)
-    out = []
-    for rule, pat in rules:
-        mask = pc.match_substring(arr, rule.anchor).to_numpy(
-            zero_copy_only=False)
-        mask &= ~claimed
-        if not mask.any():
-            continue
-        cand = sent[mask]
-        cap = cand["s"].str.extract(pat)  # cols 0 (subj), 1 (obj)
-        hit = cap[0].notna()
-        if not hit.any():
-            continue
-        claimed[cand.index[hit]] = True
-        m = cand.loc[hit, ["conv_id", "turn_idx", "part_id"]].copy()
-        m["subj"] = cap.loc[hit, 0]
-        m["pred"] = rule.pred
-        m["obj"] = cap.loc[hit, 1]
-        m["obj_is_iri"] = rule.obj_kind == "I"
-        m["obj_is_mention"] = rule.obj_kind == "M"
-        out.append(m[_OUT_COLS])
-    if not out:
-        return None
-    res = pd.concat(out, ignore_index=True)
-    res["turn_idx"] = res["turn_idx"].astype("int32")
-    res["part_id"] = res["part_id"].astype("int32")
-    return res
-
-
-def _extract_arrow(pdf: pd.DataFrame, arr):
-    """Arrow/RE2 fast path over rows proven portable (see module doc).
-
-    Sentence split without lookbehind: every `\\.\\s+` occurrence is
-    rewritten to ".\\x00" (the period restored, the whitespace consumed
-    — byte-for-byte what re.split(r"(?<=\\.)\\s+") produces on this
-    character set) and the text is split on the sentinel; list offsets
-    give each sentence its source row (list_parent_indices), replacing
-    the pandas explode. The anchor alternation then drops no-anchor
-    sentences in one scan, and each rule runs RE2 capture extraction on
-    just its still-unclaimed anchor candidates."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    step1 = pc.replace_substring_regex(arr, r"\.\s+", ".\x00")
-    ls = pc.split_pattern(step1, "\x00")
-    parents = pc.list_parent_indices(ls)
-    vals = pc.list_flatten(ls)
-    keep = pc.not_equal(vals, "")
-    if pc.any(pc.invert(keep)).as_py():
-        vals = vals.filter(keep)
-        parents = parents.filter(keep)
-    if len(vals) == 0:
-        return None
-    cand = pc.match_substring_regex(vals, _ANCHOR_ALT)
-    vals = vals.filter(cand)
-    if len(vals) == 0:
-        return None
-    parents = parents.filter(cand)
-    par_np = parents.to_numpy(zero_copy_only=False)
-    conv = pdf["conv_id"].to_numpy()
-    ti = pdf["turn_idx"].to_numpy()
-    pid = pdf["part_id"].to_numpy()
-    claimed = np.zeros(len(vals), dtype=bool)
-    out = []
-    for rule, pat in _RE2_RULES:
-        mask = pc.match_substring(vals, rule.anchor).to_numpy(
-            zero_copy_only=False)
-        mask &= ~claimed
-        if not mask.any():
-            continue
-        idx = np.nonzero(mask)[0]
-        res = pc.extract_regex(vals.take(pa.array(idx)), pat)
-        hit = pc.is_valid(res).to_numpy(zero_copy_only=False)
-        if not hit.any():
-            continue
-        hidx = idx[hit]
-        claimed[hidx] = True
-        resv = res.filter(pa.array(hit))
-        rows = par_np[hidx]
-        m = pd.DataFrame({
-            "subj": resv.field("s").to_pandas(),
-            "pred": rule.pred,
-            "obj": resv.field("o").to_pandas(),
-            "obj_is_iri": rule.obj_kind == "I",
-            "obj_is_mention": rule.obj_kind == "M",
-            "conv_id": conv[rows],
-            "turn_idx": ti[rows].astype("int32"),
-            "part_id": pid[rows].astype("int32"),
-        })
-        out.append(m[_OUT_COLS])
-    if not out:
-        return None
-    return pd.concat(out, ignore_index=True)
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        arr = pa.array(pdf["text"].fillna(""), type=pa.string())
-        dirty = pc.match_substring_regex(arr, _NON_PORTABLE_RE)
-        if pc.any(dirty).as_py():
-            dnp = dirty.to_numpy(zero_copy_only=False)
-            res = _extract_python(pdf[dnp])
-            if res is not None:
-                yield res
-            pdf = pdf[~dnp]
-            if len(pdf) == 0:
-                continue
-            arr = arr.filter(pc.invert(dirty))
-        res = _extract_arrow(pdf, arr)
-        if res is not None:
-            yield res
-
-
-def _extract_jvm(src: DataFrame) -> DataFrame:
-    """Catalyst-expression extraction for rows proven JVM-portable (see
-    _JVM_NON_PORTABLE_RE): sentence split via Java-regex lookbehind,
-    explode, then a first-match-wins CASE chain over the rule table —
-    literal-anchor `contains` prefilter, anchored `rlike` dispatch,
-    `regexp_extract` capture. Whole-stage-codegen'd end to end; no
-    JVM→Python boundary at all. Exact multiset parity with the UDF path
-    is asserted by tests (and was verified on the full 16.4M-turn bench
-    corpus: identical 11,744,344-triple multiset)."""
-    sent = src.select(
-        "conv_id", "turn_idx", "part_id",
-        F.explode(F.split(F.col("text"), SENTENCE_SPLIT)).alias("s"),
+    One scan, one plan: sentence split (Java-regex lookbehind), explode,
+    then a first-match-wins CASE chain over the rule table — literal-anchor
+    `contains` prefilter, anchored `rlike` dispatch, `regexp_extract`
+    capture. The split and rule patterns are the import-time translations
+    `_SENTENCE_SPLIT_JAVA` / `_RULES_JAVA`, which match exactly what
+    `rules.split_sentences` + `rules.extract_sentence` match on every
+    input (module docstring; tests assert parity on hostile text). Null
+    text splits to null and explodes to no sentences, as "" does in the
+    oracle."""
+    sent = turns.select(
+        "conv_id", "turn_idx", F.spark_partition_id().alias("part_id"),
+        F.explode(F.split(F.col("text"), _SENTENCE_SPLIT_JAVA)).alias("s"),
     ).filter(F.col("s") != "")
-    anchored = [f"^(?:{r.pattern})$" for r in RULES]
     rid = F.lit(-1)
     for i in reversed(range(len(RULES))):
-        cond = F.col("s").contains(RULES[i].anchor) & F.col("s").rlike(anchored[i])
+        cond = F.col("s").contains(RULES[i].anchor) & F.col("s").rlike(_RULES_JAVA[i])
         rid = F.when(cond, F.lit(i)).otherwise(rid)
     sent = sent.withColumn("_rid", rid).filter(F.col("_rid") >= 0)
     subj = F.lit(None).cast("string")
@@ -261,8 +132,8 @@ def _extract_jvm(src: DataFrame) -> DataFrame:
     for i in reversed(range(len(RULES))):
         r = RULES[i]
         c = F.col("_rid") == i
-        subj = F.when(c, F.regexp_extract("s", anchored[i], 1)).otherwise(subj)
-        obj = F.when(c, F.regexp_extract("s", anchored[i], 2)).otherwise(obj)
+        subj = F.when(c, F.regexp_extract("s", _RULES_JAVA[i], 1)).otherwise(subj)
+        obj = F.when(c, F.regexp_extract("s", _RULES_JAVA[i], 2)).otherwise(obj)
         pred = F.when(c, F.lit(r.pred)).otherwise(pred)
         is_iri = F.when(c, F.lit(r.obj_kind == "I")).otherwise(is_iri)
         is_mention = F.when(c, F.lit(r.obj_kind == "M")).otherwise(is_mention)
@@ -271,41 +142,6 @@ def _extract_jvm(src: DataFrame) -> DataFrame:
         is_iri.alias("obj_is_iri"), is_mention.alias("obj_is_mention"),
         "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
         F.col("part_id").cast("int").alias("part_id"))
-
-
-def extract_raw_triples(turns: DataFrame) -> DataFrame:
-    """turns(conv_id, turn_idx, text, ...) → raw triples with surface-form
-    subjects/objects. Column-pruned before the UDF so Arrow ships only the
-    three needed columns.
-
-    r6 (guide §4.1 — prefer built-ins; §1.2 — fix the boundary before the
-    body): profiling showed ~85% of the extraction wall was the Arrow
-    JVM→Python round-trip itself (an IDENTITY mapInPandas over the bench
-    corpus cost 5.6 s of the 6.4 s query; mapInArrow measured the same,
-    so it is IPC + row↔columnar conversion, not pandas). Rows whose text
-    is JVM-portable (the overwhelming case for real corpora — printable
-    ASCII + \\t\\n\\f) now take `_extract_jvm`, a pure-expression plan
-    with NO Python stage; only rows containing characters where Java and
-    Python regex could disagree (plus genuinely non-ASCII text) cross
-    into the retained mapInPandas path. Outputs are unioned — downstream
-    consumers are order-insensitive (aggregates/joins), and `part_id`
-    remains what it always was, the physical scan-partition lineage tag.
-    The cost is that the dirty-row branch re-scans the source with a
-    cheap predicate; at bench scale the second scan is ~0.5 s against
-    ~4 s of removed boundary, and at 100 TB the removed IPC (2-3× the
-    text bytes, both directions) dominates the extra scan the same way.
-    Measured: 16.4M-turn extract 7.2 s → 3.4 s, identical triple
-    multiset."""
-    src = turns.select(
-        "conv_id", "turn_idx", "text", F.spark_partition_id().alias("part_id")
-    )
-    jvm_dirty = F.col("text").rlike(_JVM_NON_PORTABLE_RE)
-    # null text: rlike(null) is null — route nulls to the JVM branch
-    # (split(null) explodes to nothing, same zero triples as fillna("")).
-    clean = src.filter(~F.coalesce(jvm_dirty, F.lit(False)))
-    dirty = src.filter(jvm_dirty)
-    return _extract_jvm(clean).unionByName(
-        dirty.mapInPandas(_extract_batches, schema=RAW_TRIPLES_SCHEMA))
 
 
 def mentions_from_raw(raw: DataFrame) -> DataFrame:

@@ -5,7 +5,8 @@ per-partition lineage, and wall time; a stage whose marker exists is read
 back instead of recomputed — the reference's skip-if-exists resume pattern,
 /root/reference/src/dataset_preparation.py:532-534):
 
-  1. raw_triples  — scan → window turn assembly → mapInPandas extraction
+  1. raw_triples  — scan → window turn assembly → regex extraction (one
+                    Catalyst plan, no Python worker)
   2. entities     — mentions → blocking/similarity/sameAs edges → CC → map
   3. triples      — canonicalize subj/obj (broadcast map) → pred-partitioned
                     graph table (the Iceberg-table analog; parquet in this
@@ -179,7 +180,10 @@ def _write_stage(
     fan out over executors past _LINEAGE_DISTRIBUTE_THRESHOLD files."""
     t0 = time.time()
     path = os.path.join(work_dir, stage)
-    writer = df.write.mode("overwrite")
+    # zstd writes checkpoints ~25% smaller than the default snappy. It is
+    # set on this writer, not as a session conf, so every other parquet
+    # write in the session keeps its own codec.
+    writer = df.write.mode("overwrite").option("compression", "zstd")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

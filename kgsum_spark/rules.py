@@ -113,7 +113,8 @@ def canonical_id(norm: str) -> str:
 def extract_sentence(sentence: str):
     """Reference-oracle extraction for ONE sentence (pure Python, used by
     the single-process oracle and unit tests — the Spark path is the
-    vectorized pandas implementation in extraction.py).
+    Catalyst plan in extraction.py, whose Java-regex translations of these
+    patterns the tests hold to this function).
 
     Returns (rule, subj_surface, obj_surface) or None.
     """

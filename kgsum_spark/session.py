@@ -50,12 +50,13 @@ def build_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 100k-row Arrow batches: the extraction/decode UDFs pay fixed
-        # per-batch costs (Arrow slice assembly, pandas frame build, regex
-        # compile-cache lookups); 10k batches measured 10-15% slower on the
-        # 16.4M-turn extraction bench, 200k regressed (bigger-than-L3
-        # working sets). ~20MB of text per batch — far under executor
-        # memory, and the scan partition size still caps the real chunk.
+        # 100k-row Arrow batches: the pandas UDFs (N-Triples parse, media
+        # decode, ANN verify, language id) pay fixed per-batch costs (Arrow
+        # slice assembly, pandas frame build, regex compile-cache lookups);
+        # on a 16.4M-row regex UDF, 10k batches measured 10-15% slower and
+        # 200k regressed (bigger-than-L3 working sets). ~20MB of text per
+        # batch — far under executor memory, and the scan partition size
+        # still caps the real chunk.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
@@ -68,7 +69,11 @@ def build_session(
         # ~400 Janino compilations per bench pass, 0-2 once the cache
         # holds the working set. Scale-independent (keyed by generated
         # source, not data); compiled classes are deterministic, so this
-        # caches compiler state only, never data or results.
+        # caches compiler state only, never data or results. Caveat: the
+        # cache is a JVM-wide static sized at the first compilation, so if
+        # code was generated in this JVM before this conf applied (e.g.
+        # get_or_create reusing an outside session), the cache keeps that
+        # size while spark.conf.get still reports 4096.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():

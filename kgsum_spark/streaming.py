@@ -8,9 +8,9 @@ checkpointed micro-batches give us for free: each micro-batch is a
 resumable shard with recorded offsets.
 
 Two modes:
-- `streaming_extraction`: stateless stream → mapInPandas extraction →
-  append sink. No window needed (extraction is per-turn); ordering-
-  dependent work stays in batch.
+- `streaming_extraction`: stateless stream → regex extraction (the batch
+  Catalyst plan, no Python worker) → append sink. No window needed
+  (extraction is per-turn); ordering-dependent work stays in batch.
 - `streaming_extraction_foreach_batch`: per-micro-batch full stage-1
   (window turn-assembly included — windows are legal on the batch df
   inside foreachBatch), appended to the triples table. This is the mode a

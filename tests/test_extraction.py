@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import given, seed, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kgsum_spark.assembly import assemble_turns
@@ -100,33 +103,10 @@ def test_empty_dataframe_extraction(spark):
     assert extract_raw_triples(df).count() == 0
 
 
-def test_jvm_fastpath_dispatch_parity_with_oracle(spark):
-    """r6: extract_raw_triples routes JVM-portable rows through a pure
-    Catalyst-expression plan and everything else through the mapInPandas
-    path. The UNION of both branches must equal the single-process
-    oracle on a mix that exercises the dispatch — including \\r (the one
-    ASCII char where Java `.` and Python `.` disagree, so it MUST take
-    the Python branch) and the Arrow-fallback hostiles."""
-    from kgsum_spark.extraction import _JVM_NON_PORTABLE_RE
-    from kgsum_spark.rules import extract_sentence, split_sentences
-    import re as _re
-
-    texts = [
-        None, "", "A is a b.", "A is a b. C was created by D.",
-        "A was created by B same as http://u.",
-        "CR\rX is a b.",                  # \r inside subject → Python path
-        "A is a b.\rC is a d.",           # \r as split whitespace
-        "Ünïcode is a tëst.",             # unicode → Python path
-        'E titled "".',                    # empty quoted object (JVM path)
-        "tab\tis a b.\n\nH has subject k.",
-        "J uses vocabulary http://v.org/v. K has identifier id9.",
-        "x is a b is a c.",               # lazy backtracking
-        "no anchor sentence here.", "trailing. ",
-        "F\x0corm feed is a b.",          # \f stays on the JVM path
-    ]
-    # the dispatch predicate itself must send \r/unicode to Python
-    assert _re.search(_JVM_NON_PORTABLE_RE, "CR\rX") is not None
-    assert _re.search(_JVM_NON_PORTABLE_RE, "F\x0corm") is None
+def _assert_parity_with_oracle(spark, texts):
+    """extract_raw_triples over `texts` (one row each) equals the
+    single-process oracle (rules.split_sentences + rules.extract_sentence),
+    slot kinds included."""
     rows = [(f"c{i}", i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
     got = sorted(
@@ -136,61 +116,129 @@ def test_jvm_fastpath_dispatch_parity_with_oracle(spark):
     exp = []
     for i, t in enumerate(texts):
         for s in split_sentences(t or ""):
-            r = extract_sentence(s)
-            if r:
-                rule, subj, obj = r
+            hit = extract_sentence(s)
+            if hit:
+                rule, subj, obj = hit
                 exp.append((subj, rule.pred, obj, rule.obj_kind == "I",
                             rule.obj_kind == "M", f"c{i}", i))
     assert got == sorted(exp)
-    assert len(got) > 0
+    return got
 
 
-def test_arrow_fastpath_parity_with_python_oracle():
-    """r6: the extraction UDF runs an Arrow/RE2 fast path for rows whose
-    characters are 'portable' (printable ASCII + tab/newline/FF/CR) and
-    routes everything else to the original pandas/Python-`re` path. Both
-    paths must agree byte-for-byte with the single-process oracle
-    (rules.extract_sentence over rules.split_sentences), including on
-    rows that force the fallback: unicode, NBSP, vertical tab, \\x1c
-    (Python treats it as whitespace, RE2 does not), and the \\x00 split
-    sentinel itself."""
-    import pandas as pd
+def test_jvm_fastpath_dispatch_parity_with_oracle(spark):
+    """Rows that the old JVM/Python row dispatch sent to Python because
+    Java's `.` and Python's `.` disagree on them now take the one Catalyst
+    plan and must still match the oracle: the `(?d)` (UNIX_LINES)
+    translation keeps `.` off \\r, \\x85 and U+2028 the way Python's is."""
+    texts = [
+        None, "", "A is a b.", "A is a b. C was created by D.",
+        "A was created by B same as http://u.",
+        "CR\rX is a b.",                  # \r inside subject
+        "A is a b.\rC is a d.",           # \r as split whitespace
+        "Ünïcode is a tëst.",
+        'E titled "".',                    # empty quoted object
+        "tab\tis a b.\n\nH has subject k.",
+        "J uses vocabulary http://v.org/v. K has identifier id9.",
+        "x is a b is a c.",               # lazy backtracking
+        "no anchor sentence here.", "trailing. ",
+        "F\x0corm feed is a b.",
+        "N\x85L is a b.", "L\u2028S is a b.", "Emoji 😀 is a b.",
+        "A is a b\n.", "A is a b.\r\n", 'T titled "a\nb".',
+    ]
+    assert len(_assert_parity_with_oracle(spark, texts)) > 0
 
-    from kgsum_spark.extraction import _OUT_COLS, _extract_batches
-    from kgsum_spark.rules import extract_sentence, split_sentences
 
+def test_arrow_fastpath_parity_with_python_oracle(spark):
+    """Rows that the old Arrow/RE2 fast path handed to the pandas fallback
+    because RE2 and Python disagree on whitespace now take the one Catalyst
+    plan and must still match the oracle: the explicit class that stands in
+    for Python's Unicode `\\s` (\\x0b, \\x1c, \\x85, NBSP, U+2028, U+3000)
+    in the sentence split, its negation in the URI slot's `\\S`, and the
+    \\x00 byte."""
     texts = [
         None, "", "   ", "A is a b.", "A is a b. C was created by D.",
         "A was created by B same as http://u.",     # two-rule overlap
         "x is a b is a c.",                         # lazy backtracking
-        "Ünïcode is a tëst.",                       # unicode → fallback
-        "NB SP is a b.",                       # NBSP → fallback
-        "V\x0bT is a b.",                           # \x0b → fallback
-        "A is a b.\x1cC is a d.",                   # \x1c whitespace → fallback
-        "S\x00entinel is a b.",                     # \x00 byte → fallback
+        "Ünïcode is a tëst.",
+        "NB\xa0SP is a b.", "A is a b.\xa0C is a d.",
+        "V\x0bT is a b.",
+        "A is a b.\x1cC is a d.",
+        "S\x00entinel is a b.",
         'E titled "".',                             # empty quoted object
         "tab\tis a b.\n\nH has subject k.",
         "multi.  space. I has theme t.",
         "no anchor sentence here.",
         "J uses vocabulary http://v.org/v. K has identifier id9.",
         "trailing. ",
+        "A is a b.\x85C is a d.", "A is a b.\u2028C is a d.",
+        "I\u3000S is a b.", "A is a b.\u3000C is a d.",
+        "K same as http://x\u3000y.", "K same as http://x\x85.",
+        "K same as http://😀.",
     ]
-    pdf = pd.DataFrame({
-        "conv_id": [f"c{i}" for i in range(len(texts))],
-        "turn_idx": list(range(len(texts))),
-        "text": texts,
-    })
-    pdf["part_id"] = 7
-    got = list(_extract_batches(iter([pdf])))
-    got = (pd.concat(got, ignore_index=True) if got
-           else pd.DataFrame(columns=_OUT_COLS))
-    exp = []
-    for i, t in enumerate(texts):
-        for s in split_sentences(t or ""):
-            r = extract_sentence(s)
-            if r:
-                rule, subj, obj = r
-                exp.append((subj, rule.pred, obj, rule.obj_kind == "I",
-                            rule.obj_kind == "M", f"c{i}", i, 7))
-    got_rows = sorted(map(tuple, got[_OUT_COLS].itertuples(index=False, name=None)))
-    assert got_rows == sorted(exp)
+    assert len(_assert_parity_with_oracle(spark, texts)) > 0
+
+
+_HOSTILE_ALPHABET = [
+    "A", "b", "x", "-", "é", "😀", ".", " ", '"', "/",
+    "\t", "\n", "\r", "\x0b", "\x0c", "\x1c", "\x00", "\x85", "\xa0",
+    "\u2028", "\u3000",
+    " is a ", " was created by ", " same as ", " titled ", "http://",
+]
+
+
+@seed(20261017)
+@settings(max_examples=30, deadline=None, database=None)
+@given(st.lists(st.lists(st.sampled_from(_HOSTILE_ALPHABET), max_size=24)
+                .map("".join), min_size=1, max_size=16))
+def test_single_plan_parity_property(spark, texts):
+    _assert_parity_with_oracle(spark, texts)
+
+
+def test_whitespace_and_dot_translation_over_all_code_points(spark):
+    """The Java translations of `\\s`, `\\S` and `.` match exactly the code
+    points Python's match, over every code point a Spark string can hold
+    (all but the surrogates). One row holds them all; Java's
+    regexp_replace deletes the matches and Python's re.sub must leave the
+    same string."""
+    import re
+    import sys
+
+    from kgsum_spark.extraction import _java_regex
+
+    allcp = "".join(chr(c) for c in range(sys.maxunicode + 1)
+                    if not 0xD800 <= c <= 0xDFFF)
+    df = spark.createDataFrame([(allcp,)], "s string")
+    pats = [r"\s", r"\S", "."]
+    row = df.select(*[F.regexp_replace("s", _java_regex(p), "").alias(f"p{i}")
+                      for i, p in enumerate(pats)]).first()
+    for i, p in enumerate(pats):
+        assert row[f"p{i}"] == re.sub(p, "", allcp), p
+    assert len(re.findall(r"\s", allcp)) == 29
+
+
+def test_translation_guard_rejects_classes_it_cannot_keep_exact():
+    from kgsum_spark.extraction import _SPACE, _java_regex
+
+    for bad in (r"[\s]+", r"[^\S]", r"a[\\x]", r"[a[b]]"):
+        with pytest.raises(ValueError):
+            _java_regex(bad)
+    # outside a class an escaped backslash stays a literal, not a \s
+    assert _java_regex(r"a\\s") == r"(?d)a\\s"
+    assert _java_regex(r"a\s[^\n]") == "(?d)a" + _SPACE + r"[^\n]"
+
+
+def test_extraction_plan_is_one_jvm_scan(spark, tmp_path):
+    """One scan of the source, no Python evaluation node anywhere."""
+    path = str(tmp_path / "turns")
+    spark.createDataFrame(
+        [("c0", 0, "A is a b. C\rD is a e.")],
+        "conv_id string, turn_idx int, text string").write.parquet(path)
+    raw = extract_raw_triples(spark.read.parquet(path))
+    plan = raw._sc._jvm.PythonSQLUtils.explainString(
+        raw._jdf.queryExecution(), "formatted")
+    for node in ("MapInPandas", "ArrowEvalPython", "PythonUDF",
+                 "BatchEvalPython", "Union"):
+        assert node not in plan, node
+    scans = [ln for ln in plan.splitlines()
+             if ln.startswith("(") and " Scan " in ln]
+    assert len(scans) == 1, scans

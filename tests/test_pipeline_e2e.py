@@ -119,6 +119,32 @@ def test_salted_join_same_triples(spark, transcripts_df, tmp_path, baseline_set)
     assert baseline_set == b
 
 
+def test_hostile_text_same_triples_cold_and_resumed(
+    spark, corpus, tmp_path, baseline_set
+):
+    """`\\r\\n` sentence breaks and a non-ASCII, rule-free sentence on
+    every turn must leave the graph unchanged, both on a cold run and when
+    linking and materialization resume from the raw_triples checkpoint."""
+    from kgsum_spark import schemas
+
+    pdf = corpus.transcripts.copy()
+    pdf["text"] = (pdf["text"].str.replace(". ", ".\r\n", regex=False)
+                   + " naïve café note ok.")
+    tdf = spark.createDataFrame(pdf, schema=schemas.TRANSCRIPTS)
+    wd = str(tmp_path / "hostile")
+
+    def triples(res):
+        return {tuple(r) for r in
+                res.triples.select("subj", "pred", "obj").distinct().collect()}
+
+    assert triples(run_pipeline(spark, tdf, wd, resume=False)) == baseline_set
+    for stage in ("entities", "triples"):
+        os.remove(os.path.join(wd, f"_MARKER_{stage}.json"))
+    res = run_pipeline(spark, tdf, wd, resume=True)
+    assert res.metrics["resumed"] == ["raw_triples"]
+    assert triples(res) == baseline_set
+
+
 def test_pred_partitioned_layout(work_dir):
     parts = os.listdir(os.path.join(work_dir, "triples"))
     assert any(p.startswith("pred=") for p in parts)
