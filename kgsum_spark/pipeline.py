@@ -1,9 +1,9 @@
 """End-to-end staged pipeline with checkpoint/resume and lineage counters.
 
-Stages (each writes a parquet checkpoint + a JSON marker with row counts,
-per-partition lineage, and wall time; a stage whose marker exists is read
-back instead of recomputed — the reference's skip-if-exists resume pattern,
-/root/reference/src/dataset_preparation.py:532-534):
+Each stage writes a parquet checkpoint and a JSON marker (rows, lineage,
+bytes, task seconds, wall time); a stage whose marker exists is read back
+instead of recomputed. Lineage comes from the write job's own task
+metrics: rows written per task, keyed by the `part-NNNNN` file number.
 
   1. raw_triples  — scan → window turn assembly → regex extraction (one
                     Catalyst plan, no Python worker)
@@ -21,6 +21,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +31,12 @@ from .assembly import assemble_turns
 from .canonicalize import canonical_map
 from .extraction import extract_raw_triples, mentions_from_raw
 from .linking import all_edges, salted_broadcast_map
+
+
+# An entities map above this many rows (~1 GB at 50 B/row) is not
+# broadcast; canonicalization takes the salted shuffle join instead.
+_SALT_ABOVE_ROWS = 20_000_000
+_N_SALTS = 8
 
 
 @dataclass
@@ -56,128 +63,52 @@ def _stage_done(work_dir: str, stage: str) -> bool:
         return False
 
 
-# Crossing points measured (tools run, this box): a page-cached LOCAL
-# footer read is ~0.03 ms/file while the distributed pass pays a ~0.5 s
-# task-scheduling fixed cost — serial wins locally up to ~10k files. On
-# an object store a footer GET is ~10-50 ms, so the crossing is tens of
-# files. Hence two thresholds, picked by path scheme.
-_LINEAGE_DISTRIBUTE_THRESHOLD_LOCAL = 8192
-_LINEAGE_DISTRIBUTE_THRESHOLD_REMOTE = 64
-# Footers batched per task: ~512 per task keeps remote tasks in the
-# seconds range and the job wide.
-_LINEAGE_FILES_PER_TASK = 512
+def _seq(scala_seq):
+    # by index: py4j iteration over a converted java.util.List costs ~15 ms
+    return [scala_seq.apply(i) for i in range(scala_seq.length())]
 
 
-def _lineage_threshold(path: str) -> int:
-    from urllib.parse import urlparse
-
-    scheme = urlparse(path).scheme
-    if scheme in ("", "file"):
-        return _LINEAGE_DISTRIBUTE_THRESHOLD_LOCAL
-    return _LINEAGE_DISTRIBUTE_THRESHOLD_REMOTE
-
-
-def _footer_rows(paths: list[str]) -> list[tuple[int, int]]:
-    """(write-task id, footer row count) partial sums for a list of
-    parquet files — the per-task body of the distributed lineage pass
-    (also the serial fallback). Pure function of the file list, so the
-    serial and distributed paths are identical by construction."""
-    import re
-
-    import pyarrow.parquet as pq
-
-    agg: dict[int, int] = {}
-    pat = re.compile(r"part-(\d+)")
-    for fp in paths:
-        m = pat.search(os.path.basename(fp))
-        pid = int(m.group(1)) if m else -1
-        agg[pid] = agg.get(pid, 0) + pq.ParquetFile(fp).metadata.num_rows
-    return sorted(agg.items())
-
-
-def _footer_lineage(
-    path: str, spark: SparkSession | None = None, force_distribute: bool = False
-) -> list[dict]:
-    """Rows per write task from parquet FOOTERS only — no data scan. The
-    `part-NNNNN` index in each file name is the writing task's id, so
-    summing footer row counts per index reconstructs per-partition lineage
-    from metadata (r1 re-read and re-aggregated the full stage output: a
-    second full scan per stage — 2× I/O at 100 TB).
-
-    The footer reads are DISTRIBUTED above a scheme-dependent file-count
-    threshold: the driver parallelizes the file list (~512 files per
-    task), executors read `metadata.num_rows` and return per-task
-    (part_id, rows) partial sums, and the driver merges those tiny pairs
-    — at 10⁵-10⁶ files per stage the old serial driver loop was minutes
-    of stall three times per pipeline (r4 VERDICT #1), and on an object
-    store (10-50 ms per footer GET) it is hours. The os.walk LISTING
-    stays on the driver: one metadata list pass is the same work Spark's
-    own file index does for any scan, and it yields only file names.
-    Executors open the files by path, which assumes the stage directory
-    is on shared storage — true for any real cluster (HDFS/S3 via
-    pyarrow's FS) and for local-mode tests. `force_distribute` exists for
-    tests and for callers who know their FS latency."""
-    from urllib.parse import urlparse
-
-    if urlparse(path).scheme in ("", "file"):
-        files = [
-            os.path.join(root, fn)
-            for root, _dirs, fns in os.walk(path)
-            for fn in fns
-            if fn.endswith(".parquet")
-        ]
-    else:
-        # os.walk returns NOTHING for object-store/HDFS paths — the r5
-        # remote threshold was unreachable and lineage silently came back
-        # empty (ADVICE r5). List via the Hadoop FileSystem recursive
-        # iterator instead (same API family as sources._hadoop_list_files;
-        # works for every scheme Spark itself can read). Executors then
-        # open the files via pyarrow's own FS layer in _footer_rows.
-        if spark is None:
-            raise ValueError(
-                f"_footer_lineage: non-local path {path!r} requires a "
-                "SparkSession to list files (Hadoop FS)")
-        jvm = spark.sparkContext._jvm
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(hconf)
-        it = fs.listFiles(jpath, True)
-        files = []
-        while it.hasNext():
-            p = it.next().getPath().toString()
-            if p.endswith(".parquet"):
-                files.append(p)
-    if spark is None or (
-        not force_distribute and len(files) <= _lineage_threshold(path)
-    ):
-        pairs = _footer_rows(files)
-    else:
-        sc = spark.sparkContext
-        nslices = max(
-            1,
-            min(
-                -(-len(files) // _LINEAGE_FILES_PER_TASK),
-                sc.defaultParallelism * 2,
-            ),
-        )
-        partials = (
-            sc.parallelize(files, nslices)
-            .mapPartitions(lambda it: _footer_rows(list(it)))
-            .collect()
-        )
-        merged: dict[int, int] = {}
-        for pid, rows in partials:
-            merged[pid] = merged.get(pid, 0) + rows
-        pairs = sorted(merged.items())
-    return [{"part_id": k, "rows": v} for k, v in pairs]
+def _write_task_metrics(sc, tag: str) -> tuple[list[dict], int, float]:
+    """(lineage, bytes written, task seconds) summed over the successful
+    task records of every stage attempt of the jobs tagged `tag`. Raises
+    rather than under-counts when the status store has evicted tasks
+    (`spark.ui.retainedTasks`)."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+    stage_ids = {sid for job in jsc.statusTracker().getJobIdsForTag(tag)
+                 for sid in sc.statusTracker().getJobInfo(job).stageIds}
+    rows: dict[int, int] = {}
+    nbytes = run_ms = 0
+    for sid in stage_ids:
+        for att in _seq(store.stageData(sid, False, [], False, no_quantiles)):
+            tasks = [t for t in _seq(store.taskList(sid, att.attemptId(), 2**31 - 1))
+                     if t.status() == "SUCCESS"]
+            if len(tasks) < att.numCompleteTasks():
+                raise RuntimeError(
+                    f"stage {sid} attempt {att.attemptId()}: the status store "
+                    f"keeps {len(tasks)} of {att.numCompleteTasks()} successful "
+                    "tasks; raise spark.ui.retainedTasks")
+            for t in tasks:
+                m, pid = t.taskMetrics().get(), t.partitionId()
+                out = m.outputMetrics()
+                rows[pid] = rows.get(pid, 0) + out.recordsWritten()
+                nbytes += out.bytesWritten()
+                run_ms += m.executorRunTime()
+    lineage = [{"part_id": p, "rows": n} for p, n in sorted(rows.items()) if n]
+    return lineage, nbytes, run_ms / 1000
 
 
 def _write_stage(
     df: DataFrame, work_dir: str, stage: str, partition_by: list[str] | None = None
 ) -> dict:
-    """Write checkpoint + marker. Lineage = rows per write task, recovered
-    metadata-only from parquet footers, per north_rule; the footer reads
-    fan out over executors past _LINEAGE_DISTRIBUTE_THRESHOLD files."""
+    """Write checkpoint + marker. The write runs under its own job tag (a
+    tag, unlike a job group, leaves the caller's group alone); lineage,
+    bytes and task time come from that write's task records, with no
+    listing or footer reads. A file's `part-NNNNN` is the partition id of
+    the task that wrote it, which is the task index except in a retried
+    attempt that reruns only the missing partitions."""
     t0 = time.time()
     path = os.path.join(work_dir, stage)
     # zstd writes checkpoints ~25% smaller than the default snappy. It is
@@ -186,25 +117,21 @@ def _write_stage(
     writer = df.write.mode("overwrite").option("compression", "zstd")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-    lineage = _footer_lineage(path, spark=df.sparkSession)
-    if not lineage:
-        # A freshly written stage with zero parquet files is either a
-        # legitimately empty DataFrame (valid: schema-only marker) or an
-        # FS/listing failure; surface it rather than silently recording
-        # rows=0 (ADVICE r5).
-        import warnings
-
-        warnings.warn(
-            f"_write_stage({stage!r}): no parquet files found under "
-            f"{path!r} after write — empty stage or listing failure",
-            stacklevel=2,
-        )
+    sc = df.sparkSession.sparkContext
+    tag = f"kgsum_stage_{stage}_{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        writer.parquet(path)
+    finally:
+        sc.removeJobTag(tag)
+    lineage, bytes_written, task_s = _write_task_metrics(sc, tag)
     meta = {
         "stage": stage,
         "rows": sum(p["rows"] for p in lineage),
         "partitions": len(lineage),
         "lineage": lineage,
+        "bytes_written": bytes_written,
+        "task_s": task_s,
         "wall_sec": round(time.time() - t0, 3),
         "schema": df.schema.jsonValue(),
     }
@@ -231,16 +158,12 @@ def run_pipeline(
     transcripts: DataFrame,
     work_dir: str,
     resume: bool = True,
-    use_salted_join: bool | str = False,
-    n_salts: int = 8,
-    auto_salt_threshold: int = 20_000_000,
 ) -> PipelineResult:
-    """use_salted_join: False = broadcast map (zero shuffle on the big
-    side — right whenever the canonical map fits executors), True = salted
-    shuffle join (skew-proof fallback), "auto" = decide from the entities
-    stage's own marker row count (metadata already on disk, no extra job):
-    a vocabulary beyond auto_salt_threshold rows (~1 GB at 50 B/row) won't
-    broadcast, so the salted path is taken. Both paths are parity-proven
+    """Run (or resume) the stages under `work_dir`, a local or shared POSIX
+    path (markers are written with `open()`). Canonicalization broadcasts
+    the entities map unless its marker counts more than _SALT_ABOVE_ROWS
+    rows, then takes the salted shuffle join; metrics["salted_join"]
+    records the choice. Both paths are parity-proven
     (tools/salted_bench.py, 16.4M turns)."""
     os.makedirs(work_dir, exist_ok=True)
     metrics: dict = {"stages": {}, "resumed": []}
@@ -298,16 +221,12 @@ def run_pipeline(
         omap = entities.select(
             F.col("norm").alias("obj_norm"), F.col("canonical_id").alias("obj_canon")
         )
-        if use_salted_join == "auto":
-            with open(_marker_path(work_dir, "entities")) as f:
-                n_vocab = json.load(f)["rows"]
-            salt_it = n_vocab > auto_salt_threshold
-            metrics["salted_join"] = salt_it
-        else:
-            salt_it = bool(use_salted_join)
+        with open(_marker_path(work_dir, "entities")) as f:
+            salt_it = json.load(f)["rows"] > _SALT_ABOVE_ROWS
+        metrics["salted_join"] = salt_it
         if salt_it:
-            t = salted_broadcast_map(t, smap, "subj_norm", n_salts)
-            t = salted_broadcast_map(t, omap, "obj_norm", n_salts)
+            t = salted_broadcast_map(t, smap, "subj_norm", _N_SALTS)
+            t = salted_broadcast_map(t, omap, "obj_norm", _N_SALTS)
         else:
             # vocabulary map is small → broadcast: zero shuffle on the big side
             t = t.join(F.broadcast(smap), "subj_norm", "left").join(

@@ -3,13 +3,31 @@ lineage markers, salted-join parity."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 
+from kgsum_spark import pipeline as P
 from kgsum_spark.pipeline import run_pipeline
+
+
+def _parquet_files(path):
+    return glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+
+
+def _footer_lineage(path):
+    """Test oracle: rows per `part-NNNNN` file number summed from the
+    parquet footers, zero-row entries dropped (as in the markers)."""
+    agg: dict[int, int] = {}
+    for fp in _parquet_files(path):
+        pid = int(re.match(r"part-(\d+)", os.path.basename(fp)).group(1))
+        agg[pid] = agg.get(pid, 0) + pq.ParquetFile(fp).metadata.num_rows
+    return [{"part_id": k, "rows": v} for k, v in sorted(agg.items()) if v]
 
 
 def _pr(triples_df, golden_pdf):
@@ -58,35 +76,45 @@ def test_markers_and_lineage(result, work_dir):
         meta = json.load(open(mp))
         assert meta["rows"] > 0
         assert sum(p["rows"] for p in meta["lineage"]) == meta["rows"]
+        assert meta["lineage"] == _footer_lineage(os.path.join(work_dir, stage))
 
 
-def test_footer_lineage_distributed_matches_serial(spark, tmp_path):
-    """Past _LINEAGE_DISTRIBUTE_THRESHOLD files the footer reads fan out
-    over executors (r4 VERDICT #1: the serial driver walk was the last
-    driver-side stall in the pipeline); the distributed pass must return
-    byte-identical lineage to the serial fallback on a many-file stage,
-    including partitioned (nested-dir) layouts."""
+def test_stage_lineage_matches_footer_oracle(spark, tmp_path):
+    """Lineage from the write tasks' metrics equals the footer sums on a
+    flat many-file write, a partitionBy write, a sparse write (tasks with
+    no rows) and an empty write; bytes_written equals the parquet bytes on
+    disk. The job tag leaves the caller's job group in place."""
     from pyspark.sql import functions as F
 
-    from kgsum_spark import pipeline as P
-
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
     df = spark.range(0, 10_000).withColumn("k", F.col("id") % 3)
-    flat = str(tmp_path / "flat")
-    df.repartition(96).write.parquet(flat)
-    serial = P._footer_lineage(flat)                 # spark=None → serial
-    dist = P._footer_lineage(flat, spark=spark, force_distribute=True)
-    assert serial == dist
-    assert sum(p["rows"] for p in dist) == 10_000
-    assert len(dist) == 96
-
-    nested = str(tmp_path / "nested")
-    df.repartition(40).write.partitionBy("k").parquet(nested)  # 120 files
-    assert P._footer_lineage(nested) == P._footer_lineage(
-        nested, spark=spark, force_distribute=True)
-    # scheme-aware threshold: local paths distribute late, remote early
-    assert P._lineage_threshold(flat) == P._LINEAGE_DISTRIBUTE_THRESHOLD_LOCAL
-    assert (P._lineage_threshold("s3://bucket/stage")
-            == P._LINEAGE_DISTRIBUTE_THRESHOLD_REMOTE)
+    writes = {
+        "flat": (df.repartition(96), None),
+        "nested": (df.repartition(40), ["k"]),                 # 120 files
+        "sparse": (spark.range(10).repartition(16), None),     # 8 empty tasks
+        "empty": (spark.createDataFrame([], "id long"), None),
+    }
+    sc.setJobGroup("outer_lineage_test", "caller's group")
+    try:
+        for stage, (d, partition_by) in writes.items():
+            before = set(tracker.getJobIdsForGroup("outer_lineage_test"))
+            ungrouped = set(tracker.getJobIdsForGroup(None))
+            meta = P._write_stage(d, str(tmp_path), stage, partition_by)
+            new_jobs = set(tracker.getJobIdsForGroup("outer_lineage_test")) - before
+            assert new_jobs, stage
+            assert set(tracker.getJobIdsForGroup(None)) == ungrouped, stage
+            path = str(tmp_path / stage)
+            assert meta["lineage"] == _footer_lineage(path), stage
+            assert meta["bytes_written"] == sum(
+                os.path.getsize(f) for f in _parquet_files(path)), stage
+    finally:
+        sc._jsc.clearJobGroup()
+    assert set(sc.getJobTags()) == set()
+    flat = json.load(open(tmp_path / "_MARKER_flat.json"))
+    assert flat["partitions"] == 96 and flat["task_s"] > 0
+    empty = json.load(open(tmp_path / "_MARKER_empty.json"))
+    assert (empty["rows"], empty["partitions"], empty["lineage"]) == (0, 0, [])
 
 
 def test_resume_skips_all_stages(spark, transcripts_df, work_dir, baseline_set, corpus):
@@ -108,15 +136,34 @@ def test_resume_mid_pipeline_identical_triples(
     assert baseline_set == e3
 
 
-def test_salted_join_same_triples(spark, transcripts_df, tmp_path, baseline_set):
-    res_s = run_pipeline(
-        spark, transcripts_df, str(tmp_path / "salted"), resume=False,
-        use_salted_join=True, n_salts=4,
-    )
+def test_salted_join_same_triples(
+    spark, transcripts_df, tmp_path, monkeypatch, baseline_set
+):
+    """With the salt gate forced open and 4 salts instead of _N_SALTS, the
+    salted join gives the broadcast path's triples."""
+    monkeypatch.setattr(P, "_SALT_ABOVE_ROWS", 0)
+    monkeypatch.setattr(P, "_N_SALTS", 4)
+    res_s = run_pipeline(spark, transcripts_df, str(tmp_path / "salted"), resume=False)
+    assert res_s.metrics["salted_join"] is True
     b = {
         tuple(r) for r in res_s.triples.select("subj", "pred", "obj").distinct().collect()
     }
     assert baseline_set == b
+
+
+def test_auto_salted_join_parity(
+    spark, transcripts_df, tmp_path, monkeypatch, result, baseline_set
+):
+    """The salt gate reads the entities marker: at the default
+    _SALT_ABOVE_ROWS the test corpus broadcasts; with the limit at 1 row
+    the salted join is taken and gives the identical triple set."""
+    assert result.metrics["salted_join"] is False
+    monkeypatch.setattr(P, "_SALT_ABOVE_ROWS", 1)
+    salted = run_pipeline(spark, transcripts_df, str(tmp_path / "auto"), resume=False)
+    assert salted.metrics["salted_join"] is True
+    got = {tuple(r) for r in
+           salted.triples.select("subj", "pred", "obj").distinct().collect()}
+    assert got == baseline_set
 
 
 def test_hostile_text_same_triples_cold_and_resumed(
@@ -172,27 +219,3 @@ def test_corrupt_marker_triggers_recompute(spark, transcripts_df, tmp_path_facto
     assert got == expect
     with open(os.path.join(wd, "_MARKER_triples.json")) as f:
         assert json.load(f)["rows"] > 0  # marker rewritten whole
-
-
-def test_auto_salted_join_parity(spark, transcripts_df, tmp_path_factory):
-    """use_salted_join='auto' with a tiny threshold must take the salted
-    path and produce the identical triple set as the broadcast path."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from kgsum_spark.pipeline import run_pipeline
-
-    wd_b = str(tmp_path_factory.mktemp("autosalt_b"))
-    base = run_pipeline(spark, transcripts_df, wd_b, resume=False)
-    expect = {tuple(r) for r in
-              base.triples.select("subj", "pred", "obj").distinct().collect()}
-    wd_s = str(tmp_path_factory.mktemp("autosalt_s"))
-    salted = run_pipeline(spark, transcripts_df, wd_s, resume=False,
-                          use_salted_join="auto", auto_salt_threshold=1)
-    assert salted.metrics["salted_join"] is True
-    got = {tuple(r) for r in
-           salted.triples.select("subj", "pred", "obj").distinct().collect()}
-    assert got == expect
-    wd_a = str(tmp_path_factory.mktemp("autosalt_a"))
-    auto = run_pipeline(spark, transcripts_df, wd_a, resume=False,
-                        use_salted_join="auto")  # default threshold: broadcast
-    assert auto.metrics["salted_join"] is False

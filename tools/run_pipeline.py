@@ -7,7 +7,11 @@ Local smoke:
 Cluster:
     zip -r kgsum_spark.zip kgsum_spark
     spark-submit --py-files kgsum_spark.zip tools/run_pipeline.py \
-        --transcripts s3://…/transcripts --work-dir s3://…/kg_work
+        --transcripts s3://…/transcripts --work-dir /shared/kg_work
+
+--work-dir must be a local or shared POSIX path (e.g. an NFS or FUSE
+mount): the stage markers are written with `open()`, so an object-store
+URI does not work there. The input may be any path Spark can read.
 
 The session comes from spark-submit's own master/memory settings on a
 cluster; locally build_session provides a tuned local[N].
@@ -26,11 +30,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--transcripts", required=True, help="input parquet/Iceberg path")
-    ap.add_argument("--work-dir", required=True, help="checkpoint + output dir")
+    ap.add_argument("--work-dir", required=True,
+                    help="checkpoint + output dir (local or shared POSIX path)")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--salted-join", action="store_true",
-                    help="use the salted shuffle join instead of broadcast "
-                         "for the canonical-map application")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
@@ -40,10 +42,7 @@ def main() -> None:
 
     spark = SparkSession.getActiveSession() or build_session("kgsum_pipeline")
     transcripts = spark.read.parquet(args.transcripts)
-    res = run_pipeline(
-        spark, transcripts, args.work_dir,
-        resume=not args.no_resume, use_salted_join=args.salted_join,
-    )
+    res = run_pipeline(spark, transcripts, args.work_dir, resume=not args.no_resume)
     n = res.triples.count()
     print(json.dumps({"triples": n, "metrics": res.metrics}))
 
