@@ -12,7 +12,7 @@ Layout:
   synth         deterministic transcript corpus + golden-triple oracle
   assembly      window-ordered turn assembly (row_number over conv_id)
   extraction    OpenIE-style triple + mention extraction (one Catalyst plan)
-  linking       token-blocking, similarity candidate joins, hot-key salting
+  linking       token-blocking, similarity candidate joins, sameAs edges
   canonicalize  iterative connected-components (large-star/small-star)
   pipeline      end-to-end staged run with checkpoint markers + lineage
   profile       the Q1-Q12 profile-query battery over the triples table

@@ -38,7 +38,7 @@ from __future__ import annotations
 import re
 import sys
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .rules import RULES, SENTENCE_SPLIT
@@ -144,11 +144,20 @@ def extract_raw_triples(turns: DataFrame) -> DataFrame:
         F.col("part_id").cast("int").alias("part_id"))
 
 
+def mention_norm(c: Column) -> Column:
+    """The one mention normalization of the KG path: lowercase, every run
+    outside `[a-z0-9]` → one space, trimmed (`rules.normalize_mention` is
+    its Python oracle). Mention norms, sameAs edge ends and stage 3's
+    canonicalization join keys all use it, so the join keys equal the
+    linked norms exactly."""
+    return F.trim(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "))
+
+
 def mentions_from_raw(raw: DataFrame) -> DataFrame:
     """Derive the mentions table (FIXTURES.md §3) declaratively from raw
     triples: every subj slot plus every mention-kind obj slot.
 
-    norm = lowercase, punct→space, collapse (reference normalizer analog
+    norm = `mention_norm` (reference normalizer analog
     /root/reference/src/pipeline_gemma.py:16-22); block_key = first token
     (token-blocking for the linking join). All JVM-side built-ins.
     """
@@ -163,9 +172,8 @@ def mentions_from_raw(raw: DataFrame) -> DataFrame:
         raw.select(F.explode(slots).alias("mention"), "conv_id", "turn_idx")
         .filter(F.col("mention").isNotNull())
     )
-    norm = F.trim(F.regexp_replace(F.lower(F.col("mention")), "[^a-z0-9]+", " "))
     return (
-        m.withColumn("norm", norm)
+        m.withColumn("norm", mention_norm(F.col("mention")))
         .filter(F.col("norm") != "")
         .withColumn("block_key", F.substring_index(F.col("norm"), " ", 1))
     )

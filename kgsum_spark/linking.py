@@ -1,13 +1,13 @@
-"""Candidate entity linking: token-blocking + similarity joins, with
-hot-key salting utilities for skewed blocks.
+"""Candidate entity linking: token-blocking + similarity joins.
 
 Design for 10^12-turn scale: similarity runs over the *distinct normalized
 vocabulary* (norms), not over mention occurrences — dedup-before-join
 collapses the power-law occurrence skew (a hot entity appearing in 10% of
-turns is still ONE vocabulary row). The occurrence→canonical mapping is a
-broadcast join of the small vocabulary map against the big triples table;
-`salted_broadcast_map` provides the salted shuffle-join fallback for when
-the vocabulary itself outgrows broadcast.
+turns is still ONE vocabulary row). The occurrence→canonical mapping
+(pipeline stage 3) is a plain left join of the big triples table against
+that small vocabulary map; Spark's planner broadcasts the map while it is
+under `autoBroadcastJoinThreshold` and otherwise takes a shuffle join
+that AQE's skew split spreads when one key is hot.
 
 Reference analog: the owl:sameAs edge set (select_local_con,
 /root/reference/src/dataset_preparation.py:354-368) is the only linking
@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .extraction import mention_norm
 from .rules import JACCARD_THRESHOLD
 from .schemas import PRED_SAMEAS
 
@@ -63,10 +64,10 @@ def similarity_edges(norms: DataFrame, threshold: float = JACCARD_THRESHOLD) -> 
 def sameas_edges(raw_triples: DataFrame) -> DataFrame:
     """Explicit alias edges from extracted `owl:sameAs` triples whose object
     is itself a mention (the 'also known as' rule) — normalized pairs."""
-    norm = lambda c: F.trim(F.regexp_replace(F.lower(c), "[^a-z0-9]+", " "))  # noqa: E731
     return (
         raw_triples.filter((F.col("pred") == PRED_SAMEAS) & F.col("obj_is_mention"))
-        .select(norm(F.col("subj")).alias("a"), norm(F.col("obj")).alias("b"))
+        .select(mention_norm(F.col("subj")).alias("a"),
+                mention_norm(F.col("obj")).alias("b"))
         .filter((F.col("a") != "") & (F.col("b") != ""))
         .distinct()
     )
@@ -80,27 +81,6 @@ def all_edges(mentions: DataFrame, raw_triples: DataFrame,
     if norms is None:
         norms = distinct_norms(mentions)
     return similarity_edges(norms).unionByName(sameas_edges(raw_triples)).distinct()
-
-
-def salted_broadcast_map(
-    big: DataFrame, mapping: DataFrame, key: str, n_salts: int = 8
-) -> DataFrame:
-    """Skew-proof equi-join of a big fact table against a mapping table.
-
-    Salts the big side's key (`pmod(hash(full row key), n_salts)`) and
-    replicates the mapping ×n_salts, so one hot key spreads over n_salts
-    reducers even under a shuffle join. Used when `mapping` outgrows the
-    broadcast threshold; otherwise `big.join(broadcast(mapping), key)` wins
-    (no shuffle at all) and is what the pipeline does by default.
-    """
-    salted_big = big.withColumn(
-        "_salt", F.pmod(F.hash(F.col(key), F.monotonically_increasing_id()), F.lit(n_salts))
-    )
-    salted_map = mapping.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    out = salted_big.join(salted_map, [key, "_salt"], "left").drop("_salt")
-    return out
 
 
 def minhash_similarity_edges(norms: DataFrame,

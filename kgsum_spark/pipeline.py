@@ -8,7 +8,7 @@ metrics: rows written per task, keyed by the `part-NNNNN` file number.
   1. raw_triples  — scan → window turn assembly → regex extraction (one
                     Catalyst plan, no Python worker)
   2. entities     — mentions → blocking/similarity/sameAs edges → CC → map
-  3. triples      — canonicalize subj/obj (broadcast map) → pred-partitioned
+  3. triples      — canonicalize subj/obj (map join) → pred-partitioned
                     graph table (the Iceberg-table analog; parquet in this
                     sandbox, `writeTo(...).append()` on a real catalog)
 
@@ -29,14 +29,10 @@ from pyspark.sql import functions as F
 
 from .assembly import assemble_turns
 from .canonicalize import canonical_map
-from .extraction import extract_raw_triples, mentions_from_raw
-from .linking import all_edges, salted_broadcast_map
+from .extraction import extract_raw_triples, mention_norm, mentions_from_raw
+from .linking import all_edges, distinct_norms
 
-
-# An entities map above this many rows (~1 GB at 50 B/row) is not
-# broadcast; canonicalization takes the salted shuffle join instead.
-_SALT_ABOVE_ROWS = 20_000_000
-_N_SALTS = 8
+_STAGES = ("raw_triples", "entities", "triples")
 
 
 @dataclass
@@ -160,32 +156,32 @@ def run_pipeline(
     resume: bool = True,
 ) -> PipelineResult:
     """Run (or resume) the stages under `work_dir`, a local or shared POSIX
-    path (markers are written with `open()`). Canonicalization broadcasts
-    the entities map unless its marker counts more than _SALT_ABOVE_ROWS
-    rows, then takes the salted shuffle join; metrics["salted_join"]
-    records the choice. Both paths are parity-proven
-    (tools/salted_bench.py, 16.4M turns)."""
+    path (markers are written with `open()`). Resume takes a prefix of the
+    stages: recomputing a stage first drops its marker and every later
+    stage's, so a failed or torn rerun never leaves a later checkpoint of
+    other input to be resumed."""
     os.makedirs(work_dir, exist_ok=True)
     metrics: dict = {"stages": {}, "resumed": []}
 
+    def stage(name, compute, partition_by=None) -> DataFrame:
+        if resume and _stage_done(work_dir, name):
+            metrics["resumed"].append(name)
+        else:
+            t0 = time.time()
+            for later in _STAGES[_STAGES.index(name):]:
+                if os.path.exists(_marker_path(work_dir, later)):
+                    os.remove(_marker_path(work_dir, later))
+            meta = _write_stage(compute(), work_dir, name, partition_by)
+            meta["stage_wall_sec"] = round(time.time() - t0, 3)
+            metrics["stages"][name] = meta
+        return _read_stage(spark, work_dir, name)
+
     # stage 1: extraction -------------------------------------------------
-    if resume and _stage_done(work_dir, "raw_triples"):
-        raw = _read_stage(spark, work_dir, "raw_triples")
-        metrics["resumed"].append("raw_triples")
-    else:
-        t0 = time.time()
-        turns = assemble_turns(transcripts)
-        raw = extract_raw_triples(turns.drop("rn"))
-        metrics["stages"]["raw_triples"] = _write_stage(raw, work_dir, "raw_triples")
-        metrics["stages"]["raw_triples"]["stage_wall_sec"] = round(time.time() - t0, 3)
-        raw = _read_stage(spark, work_dir, "raw_triples")
+    raw = stage("raw_triples", lambda: extract_raw_triples(
+        assemble_turns(transcripts).drop("rn")))
 
     # stage 2: linking + canonicalization ---------------------------------
-    if resume and _stage_done(work_dir, "entities"):
-        entities = _read_stage(spark, work_dir, "entities")
-        metrics["resumed"].append("entities")
-    else:
-        t0 = time.time()
+    def entities_map() -> DataFrame:
         mentions = mentions_from_raw(raw)
         # the vocabulary is tiny (distinct norms, not occurrences) and has
         # three consumers (both sides of the similarity self-join + the CC
@@ -193,27 +189,17 @@ def run_pipeline(
         # consumer (connected_components' capped gate-collect), so it is
         # deliberately NOT checkpointed: an eager materialization here
         # would be one more scheduling-bound job of pure fixed cost.
-        from .linking import distinct_norms
-
         norms_tok = distinct_norms(mentions).localCheckpoint()
         edges = all_edges(mentions, raw, norms=norms_tok)
-        entities = canonical_map(norms_tok.select("norm"), edges)
-        metrics["stages"]["entities"] = _write_stage(entities, work_dir, "entities")
-        metrics["stages"]["entities"]["stage_wall_sec"] = round(time.time() - t0, 3)
-        entities = _read_stage(spark, work_dir, "entities")
+        return canonical_map(norms_tok.select("norm"), edges)
+
+    entities = stage("entities", entities_map)
 
     # stage 3: canonical triple materialization ---------------------------
-    if resume and _stage_done(work_dir, "triples"):
-        triples = _read_stage(spark, work_dir, "triples")
-        metrics["resumed"].append("triples")
-    else:
-        t0 = time.time()
-        norm_expr = lambda c: F.trim(  # noqa: E731
-            F.regexp_replace(F.lower(c), "[^a-z0-9]+", " ")
-        )
-        t = raw.withColumn("subj_norm", norm_expr(F.col("subj"))).withColumn(
+    def canonical_triples() -> DataFrame:
+        t = raw.withColumn("subj_norm", mention_norm(F.col("subj"))).withColumn(
             "obj_norm",
-            F.when(F.col("obj_is_mention"), norm_expr(F.col("obj"))),
+            F.when(F.col("obj_is_mention"), mention_norm(F.col("obj"))),
         )
         smap = entities.select(
             F.col("norm").alias("subj_norm"), F.col("canonical_id").alias("subj_canon")
@@ -221,18 +207,11 @@ def run_pipeline(
         omap = entities.select(
             F.col("norm").alias("obj_norm"), F.col("canonical_id").alias("obj_canon")
         )
-        with open(_marker_path(work_dir, "entities")) as f:
-            salt_it = json.load(f)["rows"] > _SALT_ABOVE_ROWS
-        metrics["salted_join"] = salt_it
-        if salt_it:
-            t = salted_broadcast_map(t, smap, "subj_norm", _N_SALTS)
-            t = salted_broadcast_map(t, omap, "obj_norm", _N_SALTS)
-        else:
-            # vocabulary map is small → broadcast: zero shuffle on the big side
-            t = t.join(F.broadcast(smap), "subj_norm", "left").join(
-                F.broadcast(omap), "obj_norm", "left"
-            )
-        triples = t.select(
+        # no hint: the planner broadcasts the map while the entities parquet
+        # is under autoBroadcastJoinThreshold, else it shuffles and AQE
+        # splits a hot key's partition
+        t = t.join(smap, "subj_norm", "left").join(omap, "obj_norm", "left")
+        return t.select(
             F.coalesce("subj_canon", "subj").alias("subj"),
             "pred",
             F.when(F.col("obj_is_mention"), F.coalesce("obj_canon", "obj"))
@@ -243,10 +222,6 @@ def run_pipeline(
             "turn_idx",
             "part_id",
         )
-        metrics["stages"]["triples"] = _write_stage(
-            triples, work_dir, "triples", partition_by=["pred"]
-        )
-        metrics["stages"]["triples"]["stage_wall_sec"] = round(time.time() - t0, 3)
-        triples = _read_stage(spark, work_dir, "triples")
 
+    triples = stage("triples", canonical_triples, partition_by=["pred"])
     return PipelineResult(triples=triples, metrics=metrics)

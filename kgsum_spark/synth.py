@@ -15,7 +15,7 @@ Corpus shape (FIXTURES.md §1):
   - Zipf-ish conversation lengths 2..64 (skewed per-conv_id partitions);
   - entity vocabulary of ~190 groups × case/punct/abbreviation variants
     (~500 surface forms) with unique coined first tokens so token-blocking
-    is exact; a few hot entities carry >10% of mentions (salting tests);
+    is exact; a few hot entities carry >10% of mentions (hot-key skew);
   - `aka` spine sentences union groups into chains and a hub component to
     exercise multi-hop connected components;
   - rows are written shuffled so stable (conv_id, turn_idx) re-ordering is

@@ -8,7 +8,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kgsum_spark.assembly import assemble_turns
-from kgsum_spark.extraction import extract_raw_triples, mentions_from_raw
+from kgsum_spark.extraction import extract_raw_triples, mention_norm, mentions_from_raw
 from kgsum_spark.rules import (
     block_key_of,
     extract_sentence,
@@ -52,6 +52,20 @@ def test_mentions_norm_and_block(spark, transcripts_df):
     for r in m:
         assert r["norm"] == normalize_mention(r["mention"])
         assert r["block_key"] == block_key_of(r["norm"])
+
+
+def test_mention_norm_matches_python_oracle_on_hostile_strings(spark):
+    """The one JVM normalization (mention norms, sameAs edge ends, stage-3
+    join keys) equals `rules.normalize_mention` on case-mapping and
+    whitespace edge cases: `\r`, NBSP, a diacritic, dotted capital I
+    (lowercases to two code points), the Kelvin sign (lowercases to ASCII
+    `k`), empty and punctuation-only strings."""
+    texts = ["Acme\r\nCorp", "\r", "Acme\u00a0Corp", "\u00a0", "naïve café",
+             "\u0130stanbul", "\u212aelvin", "", "---", "  Zorblax  Labs. ",
+             "A\u2028B\u3000C"]
+    df = spark.createDataFrame([(t,) for t in texts], "t string")
+    got = [r[0] for r in df.select(mention_norm(F.col("t"))).collect()]
+    assert got == [normalize_mention(t) for t in texts]
 
 
 def test_part_id_lineage_present(spark, transcripts_df):

@@ -1,10 +1,11 @@
-"""Blocking, similarity edges, and the salted-join fallback."""
+"""Blocking, similarity edges, and the skew-split map join that replaced
+the salted-join fallback."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from kgsum_spark.linking import distinct_norms, salted_broadcast_map, similarity_edges
+from kgsum_spark.linking import distinct_norms, similarity_edges
 
 
 def _mentions(spark, norms):
@@ -28,21 +29,41 @@ def test_similarity_respects_threshold(spark):
 
 
 def test_salted_join_equals_broadcast(spark):
-    big = spark.range(0, 1000).select(
-        (F.col("id") % 7).cast("string").alias("k"), F.col("id").alias("v")
+    """The name is kept from the deleted salted join, whose job this now
+    checks is done by AQE: with broadcast off and 40% of the big side on
+    one key, the plain left join's final plan splits the hot partition
+    (`SortMergeJoin(skew=true)`) and gives the broadcast join's rows."""
+    big = spark.range(0, 20_000).select(
+        F.when(F.col("id") % 5 < 2, F.lit("hot"))
+        .otherwise((F.col("id") % 97).cast("string")).alias("k"),
+        F.col("id").alias("v"),
     )
     mapping = spark.createDataFrame(
-        [(str(i), f"m{i}") for i in range(7)], "k string, canon string"
+        [("hot", "mhot")] + [(str(i), f"m{i}") for i in range(0, 97, 2)],
+        "k string, canon string",
     )
-    a = (
-        salted_broadcast_map(big, mapping, "k", n_salts=4)
-        .groupBy("canon").count().orderBy("canon").collect()
-    )
-    b = (
-        big.join(F.broadcast(mapping), "k", "left")
-        .groupBy("canon").count().orderBy("canon").collect()
-    )
-    assert a == b
+    confs = {
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+    }
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        joined = big.join(mapping, "k", "left")
+        got = sorted(joined.collect())
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+    finally:
+        for k in confs:
+            spark.conf.unset(k)
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "isFinalPlan=true" in plan
+    assert "SortMergeJoin(skew=true)" in plan
+    want = sorted(big.join(F.broadcast(mapping), "k", "left").collect())
+    assert got == want
+    assert sum(r["canon"] == "mhot" for r in got) == 8_000
 
 
 def test_minhash_edges_superset_of_blocking(spark):

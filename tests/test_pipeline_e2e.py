@@ -1,5 +1,6 @@
 """End-to-end: golden-triple P/R ≥ 0.95 (north_rule), resume correctness,
-lineage markers, salted-join parity."""
+lineage markers, and the stage-3 map join: broadcast with no hint by
+default, the same triples when Spark must shuffle instead."""
 
 from __future__ import annotations
 
@@ -53,14 +54,21 @@ def result(spark, transcripts_df, work_dir):
     return run_pipeline(spark, transcripts_df, work_dir, resume=False)
 
 
+def _spo_counts(triples):
+    return {(r["subj"], r["pred"], r["obj"]): r["count"]
+            for r in triples.groupBy("subj", "pred", "obj").count().collect()}
+
+
 @pytest.fixture(scope="module")
-def baseline_set(result):
+def baseline_counts(result):
     # collected eagerly: later tests rewrite the checkpoint dir, which would
     # invalidate lazy re-reads of result.triples
-    return {
-        (r["subj"], r["pred"], r["obj"])
-        for r in result.triples.select("subj", "pred", "obj").distinct().collect()
-    }
+    return _spo_counts(result.triples)
+
+
+@pytest.fixture(scope="module")
+def baseline_set(baseline_counts):
+    return set(baseline_counts)
 
 
 def test_precision_recall(result, corpus):
@@ -136,34 +144,103 @@ def test_resume_mid_pipeline_identical_triples(
     assert baseline_set == e3
 
 
-def test_salted_join_same_triples(
-    spark, transcripts_df, tmp_path, monkeypatch, baseline_set
-):
-    """With the salt gate forced open and 4 salts instead of _N_SALTS, the
-    salted join gives the broadcast path's triples."""
-    monkeypatch.setattr(P, "_SALT_ABOVE_ROWS", 0)
-    monkeypatch.setattr(P, "_N_SALTS", 4)
-    res_s = run_pipeline(spark, transcripts_df, str(tmp_path / "salted"), resume=False)
-    assert res_s.metrics["salted_join"] is True
-    b = {
-        tuple(r) for r in res_s.triples.select("subj", "pred", "obj").distinct().collect()
-    }
-    assert baseline_set == b
+def _final_write_plan(spark, out_path):
+    """The final adaptive plan tree of the newest SQL execution that wrote
+    `out_path`, read from the SQL status store (filled with the UI off)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    for i in reversed(range(ex.length())):
+        plan = ex.apply(i).physicalPlanDescription()
+        if ("InsertIntoHadoopFsRelationCommand" in plan and out_path in plan
+                and "isFinalPlan=true" in plan):
+            return plan.split("== Initial Plan ==")[0]
+    raise AssertionError(f"no final plan writes {out_path}")
 
 
-def test_auto_salted_join_parity(
-    spark, transcripts_df, tmp_path, monkeypatch, result, baseline_set
-):
-    """The salt gate reads the entities marker: at the default
-    _SALT_ABOVE_ROWS the test corpus broadcasts; with the limit at 1 row
-    the salted join is taken and gives the identical triple set."""
-    assert result.metrics["salted_join"] is False
-    monkeypatch.setattr(P, "_SALT_ABOVE_ROWS", 1)
-    salted = run_pipeline(spark, transcripts_df, str(tmp_path / "auto"), resume=False)
-    assert salted.metrics["salted_join"] is True
-    got = {tuple(r) for r in
-           salted.triples.select("subj", "pred", "obj").distinct().collect()}
+def _spo(res):
+    return {tuple(r) for r in
+            res.triples.select("subj", "pred", "obj").distinct().collect()}
+
+
+def test_salted_join_same_triples(spark, transcripts_df, tmp_path, baseline_set):
+    """The name is kept from the deleted salted join: this is the path an
+    entities map over autoBroadcastJoinThreshold (64 MB) takes. With
+    broadcast off, stage 3 shuffles and gives the broadcast run's triples."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    wd = str(tmp_path / "shuffled")
+    spark.conf.set(key, "-1")
+    try:
+        res = run_pipeline(spark, transcripts_df, wd, resume=False)
+        got = _spo(res)
+    finally:
+        spark.conf.set(key, old)
+    plan = _final_write_plan(spark, os.path.join(wd, "triples"))
+    assert plan.count("SortMergeJoin") == 2 and "BroadcastHashJoin" not in plan
     assert got == baseline_set
+
+
+def test_auto_salted_join_parity(spark, transcripts_df, tmp_path, work_dir,
+                                 baseline_set):
+    """The name is kept from the salt gate's auto-choice test: the default
+    run still broadcasts the entities map, now with no hint, because its
+    parquet is far under autoBroadcastJoinThreshold. Only stage 3 reruns,
+    on a copy of the module run's work dir."""
+    wd = str(tmp_path / "auto")
+    shutil.copytree(work_dir, wd)
+    os.remove(os.path.join(wd, "_MARKER_triples.json"))
+    shutil.rmtree(os.path.join(wd, "triples"))
+    res = run_pipeline(spark, transcripts_df, wd, resume=True)
+    assert res.metrics["resumed"] == ["raw_triples", "entities"]
+    plan = _final_write_plan(spark, os.path.join(wd, "triples"))
+    assert plan.count("BroadcastHashJoin") == 2
+    assert "SortMergeJoin" not in plan
+    assert _spo(res) == baseline_set
+
+
+def test_same_triples_across_shuffle_partitions(
+    spark, transcripts_df, tmp_path, baseline_counts
+):
+    """The (subj, pred, obj) multiset does not depend on the shuffle
+    partition count (session default 8)."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        for n in (4, 200):
+            spark.conf.set(key, str(n))
+            res = run_pipeline(spark, transcripts_df, str(tmp_path / f"p{n}"),
+                               resume=False)
+            assert _spo_counts(res.triples) == baseline_counts, n
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_failed_rerun_does_not_resume_stale_stages(spark, tmp_path, monkeypatch):
+    """A rerun on other input that fails in stage 2 must not leave run 1's
+    entities and triples markers to be resumed: recomputing a stage drops
+    its marker and every later one first."""
+    from kgsum_spark import schemas
+    from kgsum_spark.synth import generate_corpus
+
+    def tdf(n_convs, seed):
+        c = generate_corpus(n_convs=n_convs, seed=seed)
+        return spark.createDataFrame(c.transcripts, schema=schemas.TRANSCRIPTS)
+
+    a, b = tdf(120, 7), tdf(60, 8)
+    wd = str(tmp_path / "rerun")
+    run_pipeline(spark, a, wd, resume=False)
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected stage-2 failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(P, "canonical_map", boom)
+        with pytest.raises(RuntimeError, match="injected"):
+            run_pipeline(spark, b, wd, resume=False)
+    res = run_pipeline(spark, b, wd, resume=True)
+    assert res.metrics["resumed"] == ["raw_triples"]
+    cold = run_pipeline(spark, b, str(tmp_path / "cold"), resume=False)
+    assert _spo_counts(res.triples) == _spo_counts(cold.triples)
 
 
 def test_hostile_text_same_triples_cold_and_resumed(
